@@ -27,9 +27,15 @@ from pyspark.sql.types import StringType
 
 
 def extract_property(props_col: Column | str, key: str) -> Column:
-    """P1: pull one key out of the property bag. Pure Catalyst."""
+    """P1: pull one key out of the property bag; NULL when the bag lacks
+    it. Pure Catalyst.
+
+    A map lookup (``GetMapValue``), not ``element_at``: over a bag built
+    with ``create_map`` the optimizer folds ``create_map(...)[key]`` to the
+    one value read (SimplifyExtractValueOps), so the entries a grouping
+    does not read are never computed."""
     c = F.col(props_col) if isinstance(props_col, str) else props_col
-    return F.element_at(c, key)
+    return c[key]
 
 
 def super_element_id(fields: Sequence[Column], algo: str = "sha1") -> Column:

@@ -437,6 +437,19 @@ class GraphStreamGrouping:
             out["source_id"], tgt["_tsvid"].alias("target_id"), out["event_time"], out["window"],
         )
 
+    def _endpoint_key_fields(self, side: str) -> list[Column]:
+        """Super-id hash inputs of a triple's inlined endpoint vertex, in
+        ``_vertex_id_hash_fields`` order without the trailing rowtime:
+        [label?] + grouping values."""
+        fields: list[Column] = []
+        if self.use_vertex_labels:
+            fields.append(F.col(f"{side}.vertex_label"))
+        fields += [
+            extract_property(F.col(f"{side}.vertex_properties"), k)
+            for k in self.vertex_grouping_keys
+        ]
+        return fields
+
     def edges_with_super_vertices_from_triples(
         self, triples: DataFrame, edges_unique: bool = False
     ) -> DataFrame:
@@ -445,24 +458,41 @@ class GraphStreamGrouping:
         source/target ids are *recomputed* per edge — no shuffle at all on
         the edge-expansion path. Tumbling/sliding only.
 
+        Both endpoint super-ids are stamped with the EDGE's window (the
+        rowtime of the window its event_time falls in), not with the window
+        of each endpoint's own observation. An edge whose source turn lies
+        in another window therefore points at its source group's
+        super-vertex of the edge's window, which is emitted only if some
+        vertex of that group falls in that window; the join path
+        (``edges_with_super_vertices``) drops such an edge instead.
+
+        The endpoint hash fields are extracted in the projection that
+        assigns the window, so the ``source``/``target`` structs are never
+        referenced after it: Catalyst inlines the structs and property
+        bags, folds each lookup to the one field read, and prunes the rest
+        (and the input columns feeding it) below the binding's exchange.
+
         ``edges_unique`` skips the windowed-dedup groupBy (one fewer
         shuffle) when the producer guarantees distinct edge observations."""
         assert self.window.kind != WindowKind.SESSION
         w = window_expr(self.window, "event_time")
+        keys = {
+            side: [c.alias(f"_{side}_k{i}") for i, c in enumerate(self._endpoint_key_fields(side))]
+            for side in ("source", "target")
+        }
 
         def endpoint_super_id(side: str) -> Column:
-            fields: list[Column] = []
-            if self.use_vertex_labels:
-                fields.append(F.col(f"{side}.vertex_label"))
-            fields += [
-                extract_property(F.col(f"{side}.vertex_properties"), k)
-                for k in self.vertex_grouping_keys
-            ]
+            fields = [F.col(f"_{side}_k{i}") for i in range(len(keys[side]))]
             fields.append(F.unix_millis(rowtime_expr().cast("timestamp")).cast("string"))
             return super_element_id(fields, self.config.id_hash)
 
         with_w = triples.select(
-            w.alias("window"), "edge_id", "edge_label", "edge_properties", "source", "target"
+            w.alias("window"),
+            "edge_id",
+            "edge_label",
+            "edge_properties",
+            *keys["source"],
+            *keys["target"],
         )
         if edges_unique and self.window.kind == WindowKind.TUMBLING:
             return with_w.select(
@@ -511,13 +541,7 @@ class GraphStreamGrouping:
         rowtime = w["end"] - F.expr("INTERVAL 1 MILLISECOND")
 
         def endpoint_super_id(side: str) -> Column:
-            fields: list[Column] = []
-            if self.use_vertex_labels:
-                fields.append(F.col(f"{side}.vertex_label"))
-            fields += [
-                extract_property(F.col(f"{side}.vertex_properties"), k)
-                for k in self.vertex_grouping_keys
-            ]
+            fields = self._endpoint_key_fields(side)
             fields.append(F.unix_millis(rowtime.cast("timestamp")).cast("string"))
             return super_element_id(fields, self.config.id_hash)
 

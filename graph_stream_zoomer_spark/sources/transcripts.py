@@ -118,100 +118,116 @@ def generate_transcripts(
 # transcript → property-graph binding
 # ---------------------------------------------------------------------------
 
-def _turn_props(prefix: str = "", use_arrow: bool = False) -> list[Column]:
-    """Per-turn derived properties: tool, text_len (Arrow pandas UDF per the
-    A+B axis), time-bucket (hour)."""
-    text_c = F.col(f"{prefix}text")
-    tl = pdf_text_len(text_c) if use_arrow else F.length(text_c)
-    return [
-        F.col(f"{prefix}tool").alias("tool"),
-        tl.cast("string").alias("text_len"),
-        F.date_format(F.col(f"{prefix}ts"), "yyyy-MM-dd HH").alias("hour_bucket"),
-    ]
+def _slim(turns: DataFrame, use_arrow: bool = False) -> DataFrame:
+    """Project turns down to what the property bags read, BEFORE any
+    conv_id exchange or stateful operator: the raw ``text`` payload
+    dominates row bytes but only its length survives into the properties.
+    Batch: both conv_id shuffles then carry ``text_len`` instead of
+    ``text``. Streaming: Catalyst does not prune columns through state
+    stores, so without this every buffered row of the successor join would
+    be serialized to the state store with its payload, per micro-batch.
+    ``use_arrow`` computes the length with the Arrow pandas UDF (A+B axis),
+    still ahead of the shuffle."""
+    text = F.col("text")
+    text_len = pdf_text_len(text) if use_arrow else F.length(text)
+    return turns.select(
+        "conv_id",
+        "turn_idx",
+        "role",
+        "tool",
+        "ts",
+        text_len.cast("int").alias("text_len"),
+    )
+
+
+def turn_properties(prefix: str = "", **extra: Column) -> Column:
+    """Property bag of one slim turn: tool, text_len, hour bucket, plus
+    ``extra`` entries (the edge's ``transition``).
+
+    Built with ``create_map`` so a literal-key lookup
+    (``functions.properties.extract_property``) folds to the one value it
+    reads (SimplifyExtractValueOps); Catalyst then prunes every entry a
+    grouping does not read, and the columns that feed them."""
+    entries = {
+        "tool": F.col(f"{prefix}tool"),
+        "text_len": F.col(f"{prefix}text_len").cast("string"),
+        "hour_bucket": F.date_format(F.col(f"{prefix}ts"), "yyyy-MM-dd HH"),
+        **extra,
+    }
+    return F.create_map(*[c for k, v in entries.items() for c in (F.lit(k), v)])
+
+
+def _vertex_id(prefix: str = "", conv_id: str = "conv_id") -> Column:
+    return F.concat_ws(":", conv_id, F.col(f"{prefix}turn_idx").cast("string"))
+
+
+def _vertex_struct(prefix: str, conv_id: str = "conv_id") -> Column:
+    """A triple's inlined endpoint vertex, from slim columns ``prefix*``."""
+    return F.struct(
+        _vertex_id(prefix, conv_id).alias("vertex_id"),
+        F.col(f"{prefix}role").alias("vertex_label"),
+        turn_properties(prefix).alias("vertex_properties"),
+        F.col(f"{prefix}ts").alias("event_time"),
+    )
+
+
+def _vertex_rows(slim: DataFrame) -> DataFrame:
+    return slim.select(
+        _vertex_id().alias("vertex_id"),
+        F.col("ts").alias("event_time"),
+        F.col("role").alias("vertex_label"),
+        turn_properties().alias("vertex_properties"),
+    )
 
 
 def transcript_vertices(t: DataFrame, use_arrow: bool = False) -> DataFrame:
     """vertex_id = conv_id:turn_idx, label = role (SURVEY.md §1.4)."""
-    props = _turn_props(use_arrow=use_arrow)
-    return t.select(
-        F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string")).alias("vertex_id"),
-        F.col("ts").alias("event_time"),
-        F.col("role").alias("vertex_label"),
-        F.map_from_arrays(
-            F.array(F.lit("tool"), F.lit("text_len"), F.lit("hour_bucket")),
-            F.array(*[p for p in props]),
-        ).alias("vertex_properties"),
-    )
+    return _vertex_rows(_slim(t, use_arrow))
 
 
 def transcript_triples(t: DataFrame, use_arrow: bool = False) -> DataFrame:
     """Successor triples via a single pass: lead() over (conv_id, turn_idx).
 
-    One analytic-window shuffle partitioned by conv_id; both endpoint turns
-    ride along inline, so the grouping operator's joinless fast path applies.
+    One analytic-window shuffle partitioned by conv_id over the slim turn
+    rows (no ``text``). Each triple inlines both endpoint vertices as
+    structs, so the grouping operator's joinless fast path applies; the
+    structs and property bags are plain expressions over the lead() output,
+    so Catalyst computes and shuffles only the fields a grouping reads.
     Batch form — the streaming form uses a watermarked self-join
     (streaming/binding.py).
     """
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    nxt = t.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "text",
-        "tool",
-        "ts",
-        F.lead("turn_idx").over(w).alias("n_turn_idx"),
-        F.lead("role").over(w).alias("n_role"),
-        F.lead("text").over(w).alias("n_text"),
-        F.lead("tool").over(w).alias("n_tool"),
-        F.lead("ts").over(w).alias("n_ts"),
+    cols = ("turn_idx", "role", "tool", "ts", "text_len")
+    nxt = _slim(t, use_arrow).select(
+        "conv_id", *cols, *[F.lead(c).over(w).alias(f"n_{c}") for c in cols]
     ).where(F.col("n_turn_idx").isNotNull())
 
-    def vstruct(id_expr: Column, label: str, props: list[Column], ts_col: str) -> Column:
-        return F.struct(
-            id_expr.alias("vertex_id"),
-            F.col(label).alias("vertex_label"),
-            F.map_from_arrays(
-                F.array(F.lit("tool"), F.lit("text_len"), F.lit("hour_bucket")),
-                F.array(*props),
-            ).alias("vertex_properties"),
-            F.col(ts_col).alias("event_time"),
-        )
-
-    src_id = F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string"))
-    tgt_id = F.concat_ws(":", "conv_id", F.col("n_turn_idx").cast("string"))
-    edge_props = F.map_from_arrays(
-        F.array(F.lit("tool"), F.lit("text_len"), F.lit("hour_bucket"), F.lit("transition")),
-        F.array(
-            F.col("n_tool"),
-            (pdf_text_len(F.col("n_text")) if use_arrow else F.length("n_text")).cast("string"),
-            F.date_format(F.col("n_ts"), "yyyy-MM-dd HH"),
-            F.concat_ws("->", "role", "n_role"),
-        ),
-    )
+    transition = F.concat_ws("->", "role", "n_role")
     return nxt.select(
-        F.concat(src_id, F.lit("->"), F.col("n_turn_idx").cast("string")).alias("edge_id"),
+        F.concat(_vertex_id(), F.lit("->"), F.col("n_turn_idx").cast("string")).alias("edge_id"),
         F.col("n_ts").alias("event_time"),
-        F.concat_ws("->", "role", "n_role").alias("edge_label"),
-        edge_props.alias("edge_properties"),
-        vstruct(src_id, "role", _turn_props(use_arrow=use_arrow), "ts").alias("source"),
-        vstruct(tgt_id, "n_role", _turn_props("n_", use_arrow=use_arrow), "n_ts").alias("target"),
+        transition.alias("edge_label"),
+        turn_properties("n_", transition=transition).alias("edge_properties"),
+        _vertex_struct("").alias("source"),
+        _vertex_struct("n_").alias("target"),
     )
 
 
 def transcript_graph_vertices(t: DataFrame, use_arrow: bool = False) -> DataFrame:
     """Vertex stream derived in ONE pass over the turns table: the set of
     triple endpoints = every turn of a conversation with ≥2 turns, each
-    exactly once. Splitting the triple stream instead (Extractor-style,
-    split_triples) would duplicate the whole upstream subplan per endpoint
-    projection AND emit each interior turn twice — two full extra scans +
-    a dedup shuffle at 100 TB. The count-over-conversation window rides the
-    same conv_id exchange the successor lead() already needs."""
+    exactly once. The count-over-conversation window shuffles the slim turn
+    rows by conv_id (``text_len``, never ``text``; columns no grouping
+    reads are pruned before the exchange). Splitting the triple stream
+    instead (Extractor-style, split_triples) would duplicate the whole
+    upstream subplan per endpoint projection AND emit each interior turn
+    twice — two full extra scans + a dedup shuffle at 100 TB."""
     w = Window.partitionBy("conv_id")
     return (
-        t.withColumn("_conv_turns", F.count(F.lit(1)).over(w))
+        _slim(t, use_arrow)
+        .withColumn("_conv_turns", F.count(F.lit(1)).over(w))
         .where(F.col("_conv_turns") >= 2)
-        .transform(lambda d: transcript_vertices(d, use_arrow=use_arrow))
+        .transform(_vertex_rows)
     )
 
 

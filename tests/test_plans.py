@@ -3,6 +3,8 @@ the results (the 100-TB contract — see graph_stream_zoomer_spark/plans)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -81,6 +83,47 @@ def test_grouping_stays_in_codegen(spark):
     cfg2 = StreamGraphConfig(window=cfg.window, use_arrow_extraction=True)
     out2 = transcript_graph(t, cfg2, use_arrow=True).apply(op_with_prop(cfg2))
     assert "ArrowEvalPython" in plan_stats(out2.vertices).text
+
+
+def test_flagship_binding_computes_only_what_the_grouping_reads(spark, tmp_path):
+    """Prune pin for the flagship grouping (vertex :label with Count and
+    Avg(text_len), edge :label with Count): the edge job never reads
+    ``text``, the vertex side's conv_id exchange carries ``text_len`` but
+    neither ``text`` nor ``tool``, and no unread property (the hour bucket)
+    is computed. Holds only while property lookups fold over create_map
+    bags and the triple path extracts endpoint fields alongside the
+    window."""
+    from graph_stream_zoomer_spark import AvgProperty
+
+    cfg = StreamGraphConfig(window=WindowConfig.tumbling(600, "SECONDS"))
+    generate_transcripts(spark, 200).write.parquet(str(tmp_path / "turns"))
+    t = spark.read.parquet(str(tmp_path / "turns"))
+    op = (
+        GroupingBuilder()
+        .add_vertex_grouping_key(":label")
+        .add_vertex_aggregate_function(Count())
+        .add_vertex_aggregate_function(AvgProperty("text_len"))
+        .add_edge_grouping_key(":label")
+        .add_edge_aggregate_function(Count())
+        .set_window_config(cfg.window)
+        .set_config(cfg)
+        .build()
+    )
+    out = transcript_graph(t, cfg).apply(op)
+    v, e = plan_stats(out.vertices), plan_stats(out.edges)
+
+    assert e.read_schemas, e.text[:3000]
+    assert all("text" not in re.findall(r"(\w+):", rs) for rs in e.read_schemas), e.read_schemas
+    conv_ex = re.findall(
+        r"^\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\nArguments: hashpartitioning\(conv_id",
+        v.text,
+        re.M,
+    )
+    assert len(conv_ex) == 1, v.text[:3000]
+    shuffled = {c.split("#")[0] for c in conv_ex[0].split(", ")}
+    assert "text_len" in shuffled and not shuffled & {"text", "tool"}, shuffled
+    for st in (v, e):
+        assert "date_format" not in st.text and "map_from_arrays" not in st.text, st.text[:3000]
 
 
 def test_session_expand_join_broadcasts_summary_side(spark):
